@@ -136,68 +136,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _TABLE_CACHE[key]
 
 
-#: sessions (by id) that have already written each gated edge table
-_EDGE_TABLE_WRITTEN: "set[tuple[int, str]]" = set()
-
-
-def _graph_edge_table(spark: SparkSession, sf_dir: str) -> "DataFrame | None":
-    """Opt-in shared graph-edge layout (VERDICT r12 #2 experiment).
-
-    With ``SPARK_GRAFT_EDGE_TABLE=1``: the deduped BIGINT co-shipment
-    pair frame — ``(s = l_suppkey, c = o_custkey)`` from
-    lineitem⋈orders, the edge set ``pagerank`` / ``hits_auth`` /
-    ``bfs_hops`` each re-derive per call (profiled at 50-70% of each
-    query's executor time at sf0.1) — is derived ONCE per (session, sf)
-    and written as a parquet table bucketed by ``s`` via
-    ``plans/layout.write_bucketed``; the three queries then read the
-    bucketed scan instead of re-joining lineitem, and ``pagerank``
-    (whose round key IS ``s``) reads it exchange-free.
-
-    Default OFF for the bench, deliberately: those three queries sit in
-    bench.py's ``rebuild_each_rep`` set precisely so their timed reps
-    re-materialize construction-persisted intermediates — letting reps
-    read a table another construction materialized is
-    intermediate-result caching, the thing that rule exists to prevent
-    (and re-WRITING the table per rep would just pay disk for what the
-    in-memory persist does better). At 100 TB this is the intended
-    production layout — one write, every graph query in the session
-    reads exchange-free on the bucket key. Measured deltas + plan
-    evidence: OPTIMIZATION_r13.md; correctness is gate-independent (the
-    per-query folds are injective maps of the distinct pair set).
-    """
-    import os
-    import re
-
-    if os.environ.get("SPARK_GRAFT_EDGE_TABLE", "0") != "1":
-        return None
-    from obsplus_spark.plans.layout import write_bucketed
-
-    table = "obsplus_edges_" + re.sub(r"[^0-9a-zA-Z]+", "_", sf_dir).strip("_")
-    key = (id(spark), table)
-    if key not in _EDGE_TABLE_WRITTEN:
-        li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-        if _orders_dim_small(sf_dir):
-            o = F.broadcast(o)
-        nb = spark.sparkContext.defaultParallelism
-        pairs = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .selectExpr(
-                "CAST(l_suppkey AS BIGINT) AS s",
-                "CAST(o_custkey AS BIGINT) AS c",
-            )
-            .where("s IS NOT NULL AND c IS NOT NULL")
-            # hash(s) matches the bucket spec, so each write task emits
-            # exactly one bucket file; distinct runs in place (subset
-            # rule) exactly as in the per-query derivations
-            .repartition(nb, "s")
-            .distinct()
-        )
-        write_bucketed(pairs, table, ["s"], nb, sort_cols=["s"])
-        _EDGE_TABLE_WRITTEN.add(key)
-    return spark.table(table)
-
-
 def _norm_ts(df: DataFrame) -> DataFrame:
     """Normalize an events-style ``ts`` column to int64 epoch nanoseconds.
 
@@ -6406,14 +6344,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rounded rank so the boundary is engine-stable."""
     from obsplus_spark.operators.graph import pagerank
 
-    et = _graph_edge_table(spark, sf_dir)
-    if et is not None:
-        # gated shared layout: the bucketed scan IS the deduped
-        # src-partitioned frame — zero edge exchanges in the whole query
-        return pagerank(
-            et.selectExpr("s AS src", "c AS dst"),
-            iterations=2, damping=0.85, k=20, edges_prepared=True,
-        )
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     edges = li.join(
@@ -8890,26 +8820,6 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # longs instead of ~10-byte strings; the prefixed-string ids the
     # oracle sees are reconstructed on the node-sized OUTPUT only
     # (node DIV 2 inverts both encodings; parity selects the prefix).
-    et = _graph_edge_table(spark, sf_dir)
-    if et is not None:
-        # gated shared layout: direction-doubling of the deduped pair
-        # table is still distinct (the two parities are disjoint), so
-        # edges_deduped skips the in-operator DISTINCT; the explode
-        # breaks the bucket partitioning, so the src repartition stays
-        edges = (
-            et.selectExpr(
-                "explode(array("
-                "  named_struct('src', 2 * s + 1, 'dst', 2 * c),"
-                "  named_struct('src', 2 * c, 'dst', 2 * s + 1)"
-                ")) AS e"
-            ).select("e.src", "e.dst")
-        )
-        d = bfs_distances(edges, [3, 5], max_hops=3, edges_deduped=True)
-        return d.selectExpr(
-            "concat(CASE WHEN node % 2 = 1 THEN 's' ELSE 'c' END,"
-            " CAST(node DIV 2 AS STRING)) AS node",
-            "dist",
-        )
     edges = (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .selectExpr(
@@ -9003,25 +8913,6 @@ def q_hits_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
     # string tie order) is row-identical to the string pipeline.
     # concat('c', NULL) is NULL exactly as 2*NULL+1 is, so the
     # operator's NULL-endpoint filter sees the same rows.
-    et = _graph_edge_table(spark, sf_dir)
-    if et is not None:
-        # gated shared layout: injective fold of the deduped pair table
-        # (edges_deduped skips the in-operator DISTINCT; the fold breaks
-        # the bucket partitioning, so the src repartition stays)
-        edges = et.selectExpr(
-            "CAST(2 * c + 1 AS BIGINT) AS src",
-            "CAST(2 * s AS BIGINT) AS dst",
-        )
-        return hits_scores(
-            edges, iterations=2, k=20,
-            broadcast_auth=_orders_dim_small(sf_dir),
-            edges_deduped=True,
-            node_decode=(
-                "CASE WHEN node % 2 = 1"
-                " THEN concat('c', CAST((node - 1) DIV 2 AS STRING))"
-                " ELSE concat('s', CAST(node DIV 2 AS STRING)) END"
-            ),
-        )
     edges = li.join(o, li.l_orderkey == o.o_orderkey).selectExpr(
         "CAST(2 * o_custkey + 1 AS BIGINT) AS src",
         "CAST(2 * l_suppkey AS BIGINT) AS dst",

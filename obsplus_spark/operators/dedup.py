@@ -20,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from obsplus_spark.util import plan_checkpoint
-
 
 #: slack subtracted inside every PPJoin ceil() bound — absorbs DECIMAL/
 #: float upward rounding of the rational bounds so exact-boundary pairs
@@ -787,17 +785,13 @@ def dedup_clusters(
         )
         """,
     )
-    # r13: persist WITHOUT the plan_checkpoint rebind. sql_over binds
-    # persisted inputs to the cache-substituted InMemoryRelation leaf
-    # (cache_scan, r12 batch 9/12), so every rounds-statement reference
-    # is already a one-node scan — the rebind's O(1)-re-analysis benefit
-    # is subsumed, and dropping it removes the eager physical planning
-    # of the whole pair pipeline from construction (measured 50-70% of
-    # this operator's build; the rebuild-set bench reps pay it 4×). It
-    # also unifies the AQE-on and AQE-off construction paths (the
-    # rebind was a deliberate AQE passthrough, so AQE sessions never
-    # saw its benefit) and restores relation stats/partitioning on the
-    # edge frame.
+    # Plain persist, no logical-plan rebind: sql_over binds persisted
+    # inputs to the cache-substituted InMemoryRelation leaf
+    # (cache_scan), so every rounds-statement reference is already a
+    # one-node scan. A LogicalRDD rebind would add eager physical
+    # planning of the whole pair pipeline at construction (measured
+    # 50-70% of this operator's build), act only in AQE-off sessions,
+    # and drop relation stats/partitioning from the edge frame.
     edges = edges.persist()
     _register_shingle_cache(edges)  # bounded per-session ring releases it
 
@@ -1979,7 +1973,6 @@ def phash_near_dup(
     id_col: str = "id",
     lo_col: str = "h_lo",
     hi_col: str = "h_hi",
-    sparse_pairing: bool = False,
 ) -> DataFrame:
     """Image near-duplicate pairs from 64-bit perceptual hashes (two
     32-bit words per image, e.g. ``codecs.average_hash``): band LSH on
@@ -2033,19 +2026,15 @@ def phash_near_dup(
         hashes.selectExpr(id_col, f"explode(array({bands})) AS bh")
         .select(F.col(id_col), F.col("bh.band"), F.col("bh.band_hash"))
     )
-    # pairing choice MEASURED both ways (VERDICT r10 #4): the sparse
-    # two-pass wins modestly at n=1M (29.1 vs 31.2 s warm, identical
-    # pairs — its hot-key broadcast is CAPPED at 4·2¹⁶ keys by the
-    # band space, so it is always safe here) but LOSES ~25% at the
-    # n=35k bench scale (alternating solo A/B: 1.96 vs 2.46 s min —
-    # the extra count-agg pass is pure overhead when collect_list
-    # never hits the sort-agg fallback). Single-pass stays the
-    # default; callers in the 1M+ narrow regime opt in via
-    # sparse_pairing=True — and the documented big-n story remains
-    # phash_near_dup_wide, which keeps sparse pairing unconditionally
-    # (its 32-bit buckets are near-singleton BY DESIGN).
-    pair_fn = _bucket_pairs_sparse if sparse_pairing else _bucket_pairs
-    pairs = pair_fn(banded, id_col)
+    # single-pass pairing, MEASURED against the sparse two-pass
+    # (VERDICT r10 #4): sparse wins modestly at n=1M (29.1 vs 31.2 s
+    # warm, identical pairs) but LOSES ~25% at the n=35k bench scale
+    # (alternating solo A/B: 1.96 vs 2.46 s min — the extra count-agg
+    # pass is pure overhead when collect_list never hits the sort-agg
+    # fallback). The big-n answer is phash_near_dup_wide, which keeps
+    # sparse pairing unconditionally (its 32-bit buckets are
+    # near-singleton BY DESIGN).
+    pairs = _bucket_pairs(banded, id_col)
     a = hashes.selectExpr(
         f"{id_col} AS id1", f"{lo_col} AS _lo1", f"{hi_col} AS _hi1"
     )

@@ -688,16 +688,6 @@ def _reference_time(tree: DataFrame) -> Column:
     return F.coalesce(ot, fp)
 
 
-def _seed_id(prefix: str = "x") -> Column:
-    return F.concat_ws(
-        ".",
-        F.col(f"{prefix}.network"),
-        F.col(f"{prefix}.station"),
-        F.col(f"{prefix}.location"),
-        F.col(f"{prefix}.channel"),
-    )
-
-
 def _explode_entity(
     tree: DataFrame,
     array_col: str,

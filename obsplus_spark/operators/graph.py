@@ -107,7 +107,6 @@ def pagerank(
     k: int = 20,
     src_col: str = "src",
     dst_col: str = "dst",
-    edges_prepared: bool = False,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge frame, returning the
     top-``k`` nodes — the influence/centrality pass a curation pipeline
@@ -161,23 +160,12 @@ def pagerank(
     except ValueError:  # e.g. "auto" under some AQE deployments
         _shuf = 0
     npart = max(spark.sparkContext.defaultParallelism, _shuf)
-    base_e = edges.selectExpr(f"{src_col} AS src", f"{dst_col} AS dst")
-    if not edges_prepared:
-        base_e = (
-            base_e
-            .where("src IS NOT NULL AND dst IS NOT NULL")
-            .repartition(npart, "src")
-            .distinct()
-        )
-    # else: ``edges_prepared=True`` declares the frame already deduped,
-    # NULL-free, and hash-distributed on src (the contract a src-bucketed
-    # table written by plans/layout.write_bucketed provides — same hook
-    # as bfs_distances'): the out-degree window and every downstream
-    # consumer then read the incoming distribution directly, zero
-    # exchanges for the edge frame in the whole query. The caller owns
-    # the contract — duplicate edges would silently skew the weights.
     ew = (
-        base_e
+        edges
+        .selectExpr(f"{src_col} AS src", f"{dst_col} AS dst")
+        .where("src IS NOT NULL AND dst IS NOT NULL")
+        .repartition(npart, "src")
+        .distinct()
         .selectExpr(
             "src", "dst", "1.0D / count(1) OVER (PARTITION BY src) AS w"
         )
@@ -231,7 +219,6 @@ def hits_scores(
     dst_col: str = "dst",
     broadcast_auth: bool = False,
     node_decode: str | None = None,
-    edges_deduped: bool = False,
 ) -> DataFrame:
     """Fixed-iteration HITS (hubs & authorities) over a directed edge
     frame, returning the top-``k`` authorities — the complementary
@@ -288,7 +275,7 @@ def hits_scores(
     output is row-identical to running the whole pipeline on the
     decoded keys.
     """
-    from obsplus_spark.util import ensure_parallelism, sql_over
+    from obsplus_spark.util import sql_over
 
     its = int(iterations)
     if its < 1:
@@ -334,17 +321,9 @@ def hits_scores(
         .selectExpr(f"{src_col} AS src", f"{dst_col} AS dst")
         .where("src IS NOT NULL AND dst IS NOT NULL")
         .repartition(npart, "src")
+        .distinct()
+        .persist()
     )
-    if not edges_deduped:
-        dedup = dedup.distinct()
-    # else: caller declares the edges already distinct (e.g. an
-    # injective in-row map of the deduped pair table written by
-    # plans/layout.write_bucketed) — the repartition is still applied
-    # because the rounds' in-place joins require the src hash
-    # distribution, but the DISTINCT aggregate is skipped. Duplicate
-    # edges under this flag would silently double hub/auth sums; the
-    # caller owns the contract.
-    dedup = dedup.persist()
     _register_shingle_cache(dedup)
     bhint = "/*+ BROADCAST(a) */ " if broadcast_auth else ""
     parts = [
@@ -625,8 +604,6 @@ def bfs_distances(
     max_hops: int = 3,
     src_col: str = "src",
     dst_col: str = "dst",
-    edges_prepared: bool = False,
-    edges_deduped: bool = False,
 ) -> DataFrame:
     """Multi-source BFS hop distances — frontier expansion unrolled to a
     fixed ``max_hops`` bound, the k-hop-neighborhood primitive (blast
@@ -670,20 +647,6 @@ def bfs_distances(
     plan-time literals (seed sets are small by nature — a large seed
     FRAME would instead union into round 0).
 
-    ``edges_prepared=True`` declares the edge frame ALREADY deduped,
-    NULL-free, and hash-distributed on ``src_col`` — the contract a
-    src-bucketed table written once by
-    :func:`obsplus_spark.plans.layout.write_bucketed` provides — and
-    skips the operator's repartition + distinct: the ~1.3 s
-    edge-derivation floor every graph operator re-pays per call
-    becomes a one-time layout cost the whole graph family
-    (pagerank/HITS/k-core/BFS) amortizes. The per-round frontier
-    joins read the bucketed (or otherwise pre-partitioned)
-    distribution directly; the multi-round persist is kept. The
-    caller owns the contract — undeduplicated edges would double
-    offer weights silently, so only set this for frames produced by
-    the documented layout path.
-
     Output: (node, dist) for every node within ``max_hops`` of a
     source, including the sources at dist 0.
     """
@@ -699,30 +662,14 @@ def bfs_distances(
     except ValueError:  # e.g. "auto" under some AQE deployments
         _shuf = 0
     npart = max(spark.sparkContext.defaultParallelism, _shuf)
-    if edges_prepared:
-        # projection only — preserves the incoming (bucketed)
-        # distribution; dedup/NULL-screen are the layout's contract
-        edges = edges.selectExpr(
-            f"{src_col} AS {src_col}", f"{dst_col} AS {dst_col}"
-        ).persist()
-    else:
-        edges = (
-            edges
-            .selectExpr(f"{src_col} AS {src_col}", f"{dst_col} AS {dst_col}")
-            .where(f"{src_col} IS NOT NULL AND {dst_col} IS NOT NULL")
-            .repartition(npart, src_col)
-        )
-        if not edges_deduped:
-            # ``edges_deduped=True``: the caller's frame is already
-            # distinct (e.g. an injective direction-doubling of the
-            # deduped pair table from plans/layout.write_bucketed) but
-            # NOT distributed on this operator's src key — keep the
-            # repartition (the frontier joins require it), skip the
-            # DISTINCT aggregate. Duplicate edges only multiply
-            # always-losing min-offers, but the caller owns the
-            # contract all the same.
-            edges = edges.distinct()
-        edges = edges.persist()
+    edges = (
+        edges
+        .selectExpr(f"{src_col} AS {src_col}", f"{dst_col} AS {dst_col}")
+        .where(f"{src_col} IS NOT NULL AND {dst_col} IS NOT NULL")
+        .repartition(npart, src_col)
+        .distinct()
+        .persist()
+    )
     chain = [edges]
 
     def _lit(v) -> str:

@@ -199,7 +199,7 @@ def write_bucketed(
         # a managed-table LOCATION left behind by an EARLIER session
         # (the in-memory catalog forgot the table, the warehouse dir
         # survived) fails saveAsTable even in overwrite mode — drop
-        # both first (r13; hit by the session-keyed graph edge table)
+        # both first (e.g. after a crashed session left its directory)
         spark = df.sparkSession
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         try:

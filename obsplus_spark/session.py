@@ -1,8 +1,10 @@
 """SparkSession factory with engine defaults.
 
-Defaults chosen for oracle-exact comparisons (UTC session timezone, ANSI off)
-and for scale (AQE on, shuffle partitions sized to cores locally; on a real
-cluster the shuffle-partition default is left to AQE coalescing).
+Defaults chosen for oracle-exact comparisons (UTC session timezone, ANSI on:
+Spark 4 defaults ``spark.sql.ansi.enabled=true``, so arithmetic overflow
+raises instead of wrapping) and for scale (AQE on, shuffle partitions sized
+to cores locally; on a real cluster the shuffle-partition default is left to
+AQE coalescing).
 """
 
 from __future__ import annotations

@@ -338,16 +338,38 @@ def test_apply_mixture_no_corpus_shuffle(spark):
 
 
 def test_phash_narrow_sparse_knob_parity(spark):
-    """phash_near_dup's sparse_pairing opt-in (the measured 1M+ regime
-    lever) returns the identical pair set as the single-pass default."""
-    from obsplus_spark.operators.dedup import phash_near_dup
+    """The two bucket pairers agree: ``_bucket_pairs_sparse`` (hot-key
+    count + broadcast semi filter, used by phash_near_dup_wide) returns
+    the identical pair set as the single-pass ``_bucket_pairs`` that
+    phash_near_dup uses, on the same 16-bit-banded frame — pairs shared
+    across several bands, three-member buckets and singletons."""
+    from obsplus_spark.operators.dedup import (
+        _bucket_pairs,
+        _bucket_pairs_sparse,
+    )
 
-    rows = [(1, 5, 9), (2, 5, 9), (3, 7, 9), (4, 1024, 2048)]
-    df = spark.createDataFrame(rows, "id long, h_lo long, h_hi long")
-    a = {tuple(r) for r in phash_near_dup(df, max_hamming=2).collect()}
-    b = {tuple(r) for r in
-         phash_near_dup(df, max_hamming=2, sparse_pairing=True).collect()}
-    assert a == b and (1, 2, 0) in a
+    # (id, h_lo, h_hi); bands = lo&0xFFFF, lo>>16, hi&0xFFFF, hi>>16.
+    # Multi-member buckets: band 0 = 5 {1, 2, 5}, band 1 = 9 {1, 2},
+    # band 2 = 9 {1, 2, 3}, band 2 = 2048 {4, 6}; the rest are singletons
+    hashes = [
+        (1, 5 | 9 << 16, 9 | 1 << 16),
+        (2, 5 | 9 << 16, 9 | 2 << 16),
+        (3, 7 | 8 << 16, 9 | 3 << 16),
+        (4, 1024 | 7 << 16, 2048 | 4 << 16),
+        (5, 5 | 3 << 16, 11 | 5 << 16),
+        (6, 40 << 16, 2048 | 6 << 16),
+    ]
+    rows = [
+        (i, band, (w >> shift) & 65535)
+        for i, lo, hi in hashes
+        for band, (w, shift) in enumerate(
+            [(lo, 0), (lo, 16), (hi, 0), (hi, 16)]
+        )
+    ]
+    banded = spark.createDataFrame(rows, "id long, band int, band_hash long")
+    a = {tuple(r) for r in _bucket_pairs(banded, "id").collect()}
+    b = {tuple(r) for r in _bucket_pairs_sparse(banded, "id").collect()}
+    assert a == b == {(1, 2), (1, 3), (1, 5), (2, 3), (2, 5), (4, 6)}
 
 
 def test_cut_spans_one_join_small_exchange(spark):

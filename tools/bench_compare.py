@@ -10,10 +10,11 @@ Usage: python tools/bench_compare.py [sf_dir] [reps] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -25,6 +26,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as m
+    from bench import REBUILD_EACH_REP
     from obsplus_spark import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -32,8 +34,6 @@ def main() -> int:
     only = set(sys.argv[3:])
 
     # --- engine side (bench.py protocol) ---
-    import os
-
     # partitions sized to the DATA, not the bench constant: 4 is the
     # sf0.1 sweep minimum, but a 10-80× synthetic dir needs shuffle
     # width to follow the fact tables (the r9 phash harness lesson,
@@ -48,20 +48,9 @@ def main() -> int:
         qs = {n: f for n, f in qs.items() if n in only}
     for fn in qs.values():  # warmup at the bench SF (JIT + caches)
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    # keep in lockstep with bench.py's rebuild_each_rep: every query
-    # whose construction persists a derived frame re-builds per rep so
-    # the rep re-materializes that persist (steady-state, not result
-    # caching)
-    rebuild = {"minhash_near_dup", "prune_orphans", "common_coverage",
-               "dedup_clusters", "canonical_docs", "jaccard_join", "rebalance", "dedup_eval",
-               "bcubed", "mix_audit",
-               "incremental_dedup", "semantic_dedup", "bfs_hops",
-               "hits_auth", "pagerank", "k_core", "bigram_lp",
-               "cascade_delete", "image_phash", "phash_wide", "fuzzy_decontam",
-               "leak_safe_split", "lsh_recall", "cluster_quality"}
     eng: dict[str, float] = {}
     for name, fn in qs.items():
-        df = None if name in rebuild else fn(spark, sf_dir)
+        df = None if name in REBUILD_EACH_REP else fn(spark, sf_dir)
         best = float("inf")
         for _ in range(reps):
             t0 = time.perf_counter()
