@@ -77,49 +77,67 @@ REBUILD_EACH_REP = frozenset({
 })
 
 
+#: the registry's base tables, one parquet file each in a scale-factor dir
+BASE_TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
+               "lineitem", "events", "documents", "embeddings")
+
+
+def bench_session(app_name: str, extra_conf: dict[str, str] | None = None):
+    """The measurement session shared by bench.py and the tools/ timers.
+
+    Shuffle partitions are sized to the data, not the core count
+    (``$SPARK_GRAFT_SHUFFLE``, default 4): sf0.1's largest table is
+    ~25 MB, so a handful of partitions keeps every shuffle above the
+    per-task overhead floor. Swept 2/3/4/5/6/8/32: 4 is the measured
+    minimum (9.3 s vs 11.8 s at 8, 11.1 s at 2 — below 4 the
+    compute-heavy narrow stages lose real parallelism). At real scale the
+    same data-sized rule gives data_bytes/64MB. AQE stays ON in the
+    engine's default session (its skew/coalesce re-planning is the 100-TB
+    path); here shuffle partitions are already hand-sized to the data, so
+    AQE's only effect is a stage-by-stage materialization barrier
+    measured at ~0.3 s per multi-stage query at toy scale — pure
+    scheduling overhead, not plan cost. Disabled for the measurement
+    session only. ``extra_conf`` adds to (or overrides) these settings.
+    """
+    from obsplus_spark import get_spark
+
+    return get_spark(
+        app_name,
+        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
+        extra_conf={"spark.sql.adaptive.enabled": "false", **(extra_conf or {})},
+    )
+
+
+def warm_up(spark, entrymod, sf_dir: str, fns) -> None:
+    """Steady-state set-up before timing at ``sf_dir``.
+
+    Runs each plan function in ``fns`` once at the smallest scale factor
+    (the sibling ``sf0.001`` dir, else ``sf_dir`` itself) so JVM
+    codegen/JIT of each expression tree is paid before timing, then opens
+    the base tables at the BENCH scale factor: the first query to touch
+    each table otherwise pays read.parquet schema resolution + cache
+    registration inside its timed build — session setup, not plan
+    construction.
+    """
+    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    if not os.path.isdir(warm_dir):
+        warm_dir = sf_dir
+    for fn in fns:
+        fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
+    for t in BASE_TABLES:
+        entrymod._t(spark, sf_dir, t)
+
+
 def main() -> None:
     import __spark_entry__ as entrymod
-    from obsplus_spark import get_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([\d.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    # shuffle partitions sized to the data, not the core count: sf0.1's
-    # largest table is ~25 MB, so a handful of partitions keeps every
-    # shuffle above the per-task overhead floor. Swept 2/3/4/5/6/8/32:
-    # 4 is the measured minimum (9.3 s vs 11.8 s at 8, 11.1 s at 2 —
-    # below 4 the compute-heavy narrow stages lose real parallelism).
-    # At real scale the same data-sized rule gives data_bytes/64MB.
-    # AQE stays ON in the engine's default session (its skew/coalesce
-    # re-planning is the 100-TB path); here shuffle partitions are already
-    # hand-sized to the data, so AQE's only effect is a stage-by-stage
-    # materialization barrier measured at ~0.3 s per multi-stage query at
-    # toy scale — pure scheduling overhead, not plan cost. Disabled for
-    # the measurement session only.
-    spark = get_spark(
-        "bench",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
-
+    spark = bench_session("bench")
     qs = entrymod.queries()
-
-    # warmup: run every query once at the smallest scale factor so JVM
-    # codegen/JIT of each expression tree is paid before timing (standard
-    # steady-state methodology); falls back to the bench dir itself.
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for fn in qs.values():
-        fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
-    # open the base tables at the BENCH scale factor too: the first query
-    # to touch each table otherwise pays read.parquet schema resolution +
-    # cache registration inside its timed build — session setup, not plan
-    # construction
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        entrymod._t(spark, sf_dir, t)
+    warm_up(spark, entrymod, sf_dir, qs.values())
 
     # best-of-4 per query: the host is shared, single runs show ±5×
     # scheduler noise; the min is the reproducible cost of the plan.

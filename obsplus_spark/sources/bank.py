@@ -15,6 +15,16 @@ delete-then-insert per event_id, ``eventbank.py:351-366``,
 ``utils/bank.py:434-437``); the generation swap is the jar-free equivalent
 with the same semantics.
 
+Repeated work is avoided on both paths. A written generation directory
+never changes, so its resolved relation (file listing + inferred schema)
+is kept and reused until the meta pointer moves; the pointer itself is
+re-read on every call, so another writer's swap is seen at once. An
+upsert into a non-empty table evaluates its batch once (persisted and
+materialized, then scanned by both the anti-join and the union); the
+materialized batch carries real size statistics, so Spark's own
+``autoBroadcastJoinThreshold`` rule broadcasts a small batch's keys
+instead of shuffling the whole index.
+
 Partition layout: Hive-style ``part_year=YYYY`` from the row's time column —
 the distributed analogue of the reference's templated ``{year}/{month}/...``
 directory scheme (``constants.py:576-588``), giving partition pruning on
@@ -27,10 +37,12 @@ import json
 import os
 import shutil
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from obsplus_spark.plans.predicates import fdsn_event_filter, interval_overlap
 from obsplus_spark.functions.strings import glob_match
@@ -44,6 +56,8 @@ class _GenerationTable:
         self.root = Path(root)
         self.root.mkdir(parents=True, exist_ok=True)
         self._meta = self.root / "_bank_meta.json"
+        # (generation, relation) of the last generation read
+        self._relation: tuple[int, DataFrame] | None = None
 
     # -- metadata ------------------------------------------------------------
     def _read_meta(self) -> dict:
@@ -61,18 +75,30 @@ class _GenerationTable:
         """Reference ``bank/core.py`` last-update timestamp node."""
         return self._read_meta()["last_updated_ns"]
 
+    def generation(self) -> int:
+        """The generation the meta pointer names now (-1: no data yet)."""
+        return self._read_meta()["generation"]
+
     def exists(self) -> bool:
-        return self._read_meta()["generation"] >= 0
+        return self.generation() >= 0
 
     def _gen_dir(self, gen: int) -> Path:
         return self.root / f"gen={gen}"
 
     # -- IO --------------------------------------------------------------
-    def read(self) -> DataFrame:
-        meta = self._read_meta()
-        if meta["generation"] < 0:
+    def read(self, generation: int | None = None) -> DataFrame:
+        """The table at ``generation`` (default: the current one).
+
+        A generation directory is immutable once the pointer names it, so
+        the relation resolved for it is reused while the pointer stays.
+        """
+        gen = self.generation() if generation is None else generation
+        if gen < 0:
             raise FileNotFoundError(f"bank at {self.root} has no data yet")
-        return self.spark.read.parquet(str(self._gen_dir(meta["generation"])))
+        if self._relation is None or self._relation[0] != gen:
+            df = self.spark.read.parquet(str(self._gen_dir(gen)))
+            self._relation = (gen, df)
+        return self._relation[1]
 
     def overwrite(
         self,
@@ -103,10 +129,12 @@ class _GenerationTable:
         # DataFrame handed out within the last two writes (including a
         # lazy cached index) still reads live files; older generations
         # are garbage-collected. A handle older than two writes must be
-        # re-read from the bank — document, not MVCC.
-        for gen in range(new_gen - 2):
-            old = self._gen_dir(gen)
-            if old.exists():
+        # re-read from the bank — document, not MVCC. Only the directories
+        # present are visited (a crashed earlier GC's leftovers included),
+        # so the cost follows what is kept, not how many writes came before.
+        for old in self.root.glob("gen=*"):
+            gen = old.name[len("gen="):]
+            if gen.isdigit() and int(gen) < new_gen - 2:
                 shutil.rmtree(old, ignore_errors=True)
 
     def upsert(
@@ -120,14 +148,40 @@ class _GenerationTable:
 
         The anti-join + union is exactly the reference's delete-then-insert
         (``eventbank.py:351-366``); on Delta this is one ``MERGE INTO``.
+        Rows of ``new`` are all kept, including several with one key.
+
+        Into a non-empty table the batch is evaluated once: it is
+        persisted (unless the caller already cached it) and materialized
+        here, read by both the anti-join and the union, and unpersisted
+        after the write (a caller's cache is left as it was). The
+        materialized relation carries its real size, so Spark's size rule
+        picks the anti-join strategy: a broadcast of the batch's keys when
+        small, a sort-merge join when large. The first write into an empty
+        table is a single pass and persists nothing.
         """
-        if self.exists():
-            existing = self.read()
-            keep = existing.join(new.select(key).distinct(), key, "left_anti")
+        gen = self.generation()
+        if gen < 0:
+            self.overwrite(new, partition_by, scan_started_ns=scan_started_ns)
+            return
+        with _persisted(new):
+            new.count()  # materialized: the join is planned on its real size
+            keep = self.read(gen).join(new.select(key), key, "left_anti")
             merged = keep.unionByName(new, allowMissingColumns=True)
-        else:
-            merged = new
-        self.overwrite(merged, partition_by, scan_started_ns=scan_started_ns)
+            self.overwrite(merged, partition_by, scan_started_ns=scan_started_ns)
+
+
+@contextmanager
+def _persisted(df: DataFrame):
+    """Keep ``df`` persisted for the block, then release it — unless the
+    caller had cached it already, in which case its cache is left as is."""
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
+    try:
+        yield df
+    finally:
+        if owned:
+            df.unpersist()
 
 
 def _prune_part_year(
@@ -208,12 +262,20 @@ class EventBank:
         derives from it (``events_to_df``), mirroring the reference's
         QuakeML-file + SQLite-index pair; ``trees`` passes the payload
         explicitly alongside a precomputed summary.
+
+        A nested batch feeds both tables, so it is persisted once for the
+        two writes (unless the caller cached it) and each source row —
+        for ``quakeml_to_tree`` input, each parsed file — is evaluated
+        once.
         """
         if trees is None and "origins" in events.columns:
-            trees = events
             from obsplus_spark.operators.event_tree import events_to_df
 
-            events = events_to_df(trees)
+            with _persisted(events):
+                return self.put_events(
+                    events_to_df(events), trees=events,
+                    scan_started_ns=scan_started_ns,
+                )
         df = _with_part_year(events, "time")
         self.table.upsert(
             df, "event_id", partition_by=["part_year"],
@@ -240,8 +302,12 @@ class EventBank:
         kwargs_start = kwargs.pop("starttime", None)
         kwargs_end = kwargs.pop("endtime", None)
 
+        # one pointer read per call: the cache key and the data it
+        # builds name the same generation even under a concurrent swap
+        gen = self.table.generation()
+
         def build(t1, t2):
-            df = self.table.read()
+            df = self.table.read(gen)
             df = _prune_part_year(df, t1, t2)
             return fdsn_event_filter(df, starttime=t1, endtime=t2, **kwargs)
 
@@ -264,10 +330,7 @@ class EventBank:
             return out
 
         key = tuple(sorted((k, str(v)) for k, v in kwargs.items()))
-        meta = self.table._read_meta()
-        return self._cache.get(
-            kwargs_start, kwargs_end, key, meta["generation"], build, trim
-        )
+        return self._cache.get(kwargs_start, kwargs_end, key, gen, build, trim)
 
     def get_events(self, use_cache: bool = True, **kwargs) -> DataFrame:
         """Full event payload for an index query.
@@ -416,9 +479,11 @@ class WaveBank:
         semantics) — a hit scans cached in-memory partitions, no parquet.
         """
         patterns = (network, station, location, channel)
+        # one pointer read per call (see EventBank.read_index)
+        gen = self.table.generation()
 
         def build(t1, t2):
-            df = self.table.read()
+            df = self.table.read(gen)
             # partition pruning: part_year derives from the trace START,
             # so only the UPPER bound is safe for an overlap query (a
             # trace starting in an earlier year can still overlap t1;
@@ -442,10 +507,7 @@ class WaveBank:
                 interval_overlap(t1, t2, buffer_ns=self.buffer_ns)
             )
 
-        meta = self.table._read_meta()
-        return self._cache.get(
-            starttime, endtime, patterns, meta["generation"], build, trim
-        )
+        return self._cache.get(starttime, endtime, patterns, gen, build, trim)
 
     # -- index analytics (delegate to the operator layer) --------------------
     def availability(self, **kwargs) -> DataFrame:

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from obsplus_spark.sources.bank import EventBank, WaveBank
 
@@ -264,3 +265,172 @@ def test_generation_retention_snapshot_isolation(spark, tmp_path, event_rows):
     bank.put_events(event_rows.limit(1))  # gen 3: gen 0 now GCs
     gens = {d.name for d in (tmp_path / "event_index").glob("gen=*")}
     assert gens == {"gen=1", "gen=2", "gen=3"}
+
+
+# -- write and read paths: no repeated Spark work ----------------------------
+
+
+def _counted(spark, df, col):
+    """``df`` with ``col`` routed through a Python UDF that adds one to an
+    accumulator per evaluated row: the accumulator counts how many times
+    the batch's rows are computed."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def _touch(v):
+        acc.add(1)
+        return v
+
+    return df.withColumn(col, _touch(F.col(col))), acc
+
+
+def test_update_index_evaluates_batch_once(spark, tmp_path, wave_index):
+    """An upsert into a non-empty bank computes its batch once: the
+    anti-join and the union both read the materialized batch."""
+    bank = WaveBank(spark, tmp_path)
+    bank.update_index(wave_index)
+    batch, acc = _counted(spark, wave_index, "path")
+    bank.update_index(batch)
+    assert acc.value == wave_index.count()
+    assert bank.read_index().count() == 3
+
+
+def test_put_events_trees_evaluates_batch_once(spark, tmp_path):
+    """A nested batch feeds the index and the payload table; each tree
+    row is computed once for both upserts."""
+    from obsplus_spark.operators.event_tree import SLIM_EVENT_SCHEMA
+
+    def tree(eid, t):
+        return (
+            eid, "a", None, None, 1000,
+            [("o" + eid, t, 40.0, -111.0, 5.0)],
+            [("m" + eid, 2.5, "ML", "o" + eid)],
+            [("p" + eid, t + NS, "P", None, "UU", "S1", "", "HHZ")],
+        )
+
+    bank = EventBank(spark, tmp_path)
+    bank.put_events(spark.createDataFrame([tree("e1", Y2020)], SLIM_EVENT_SCHEMA))
+    rows = [tree("e1", Y2020), tree("e2", Y2020 + 10 * NS)]
+    trees, acc = _counted(
+        spark, spark.createDataFrame(rows, SLIM_EVENT_SCHEMA), "event_id"
+    )
+    bank.put_events(trees)
+    assert acc.value == len(rows)
+    assert trees.storageLevel == StorageLevel.NONE  # not left cached
+    assert sorted(r.event_id for r in bank.get_events().collect()) == ["e1", "e2"]
+
+
+def test_small_batch_upsert_broadcasts_keys(spark, tmp_path, monkeypatch):
+    """A small batch's keys are broadcast against the index (Spark's size
+    rule on the materialized batch): no shuffle of the index."""
+    from obsplus_spark.sources.bank import _GenerationTable
+
+    plans = []
+    write = _GenerationTable.overwrite
+
+    def capture(self, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, *args, **kwargs)
+
+    index = spark.range(2000).select(
+        F.col("id").cast("string").alias("k"), F.col("id").alias("v")
+    )
+    table = _GenerationTable(spark, tmp_path / "t")
+    table.upsert(index, "k")
+    monkeypatch.setattr(_GenerationTable, "overwrite", capture)
+    table.upsert(spark.createDataFrame([("7", -7)], "k string, v long"), "k")
+    (plan,) = plans
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert "Exchange hashpartitioning" not in plan
+    assert table.read().count() == 2000
+    assert table.read().filter("k = '7'").first().v == -7
+
+
+def test_upsert_persist_ownership(spark, tmp_path):
+    """The upsert unpersists only what it persisted: a caller's cached
+    batch stays cached at the caller's level, its own is released."""
+    from obsplus_spark.sources.bank import _GenerationTable
+
+    schema = "k string, v long"
+    table = _GenerationTable(spark, tmp_path / "t")
+    table.upsert(spark.createDataFrame([("a", 1)], schema), "k")
+
+    mine = spark.createDataFrame([("b", 2)], schema)
+    table.upsert(mine, "k")
+    assert mine.storageLevel == StorageLevel.NONE
+
+    theirs = spark.createDataFrame([("c", 3)], schema).persist(
+        StorageLevel.DISK_ONLY
+    )
+    theirs.count()
+    table.upsert(theirs, "k")
+    assert theirs.storageLevel == StorageLevel.DISK_ONLY
+    theirs.unpersist()
+    assert sorted(r.k for r in table.read().collect()) == ["a", "b", "c"]
+
+
+def test_read_reuses_generation_relation(spark, tmp_path, event_rows):
+    """A generation directory never changes once written, so reading it
+    again resolves nothing: no listing, no schema-inference job."""
+    bank = EventBank(spark, tmp_path)
+    bank.put_events(event_rows)
+    bank.table.read()
+    sc = spark.sparkContext
+    sc.setJobGroup("bank-read-reuse", "two reads of one generation")
+    try:
+        first, second = bank.table.read(), bank.table.read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("bank-read-reuse") == []
+    assert first is second
+    bank.put_events(event_rows.limit(1))
+    assert bank.table.read() is not first  # the pointer moved
+
+
+def test_read_index_sees_other_instance_writes(spark, tmp_path, event_rows):
+    """The relation is reused per generation, never past a pointer swap:
+    a second bank instance's write is visible to the first at once."""
+    first = EventBank(spark, tmp_path)
+    first.put_events(event_rows)
+    assert first.read_index().count() == 3
+    other = EventBank(spark, tmp_path)
+    other.put_events(
+        spark.createDataFrame(
+            [("e9", Y2020 + 9 * NS, 40.0, -111.0, 5.0, 1.0)], event_rows.schema
+        )
+    )
+    assert {r.event_id for r in first.read_index().collect()} == {
+        "e1", "e2", "e3", "e9"
+    }
+
+
+def test_upsert_duplicate_keys(spark, tmp_path, event_rows):
+    """Pinned behaviour: an existing row with a batch key is replaced, and
+    every batch row is kept, including two that share a key."""
+    bank = EventBank(spark, tmp_path)
+    bank.put_events(event_rows)
+    bank.put_events(
+        spark.createDataFrame(
+            [
+                ("e2", Y2020 + 100 * NS, 41.0, -112.0, 6.0, 7.0),
+                ("e2", Y2020 + 100 * NS, 41.0, -112.0, 6.0, 8.0),
+            ],
+            event_rows.schema,
+        )
+    )
+    got = sorted((r.event_id, r.magnitude) for r in bank.read_index().collect())
+    assert got == [("e1", 2.5), ("e2", 7.0), ("e2", 8.0), ("e3", 4.5)]
+
+
+def test_generation_gc_removes_stale_leftovers(spark, tmp_path, event_rows):
+    """GC removes every generation directory below the retention window,
+    including one a crashed earlier GC left behind."""
+    bank = EventBank(spark, tmp_path)
+    for _ in range(5):
+        bank.put_events(event_rows.limit(1))
+    root = tmp_path / "event_index"
+    assert {d.name for d in root.glob("gen=*")} == {"gen=2", "gen=3", "gen=4"}
+    (root / "gen=0").mkdir()
+    (root / "gen=0" / "part-0.parquet").write_bytes(b"")
+    bank.put_events(event_rows.limit(1))
+    assert {d.name for d in root.glob("gen=*")} == {"gen=3", "gen=4", "gen=5"}

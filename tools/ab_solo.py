@@ -22,24 +22,12 @@ names = sys.argv[3:]
 sys.path.insert(0, root)
 
 import __spark_entry__ as entrymod  # noqa: E402
-from bench import REBUILD_EACH_REP  # noqa: E402
-from obsplus_spark import get_spark  # noqa: E402
+from bench import REBUILD_EACH_REP, bench_session, warm_up  # noqa: E402
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark(
-    "ab_solo",
-    shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
-    extra_conf={"spark.sql.adaptive.enabled": "false"},
-)
+spark = bench_session("ab_solo")
 qs = entrymod.queries()
-warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-if not os.path.isdir(warm_dir):
-    warm_dir = "/root/testdata/sf0.001"
-for nm in names:
-    qs[nm](spark, warm_dir).write.mode("overwrite").format("noop").save()
-for t in ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"):
-    entrymod._t(spark, sf_dir, t)
+warm_up(spark, entrymod, sf_dir, [qs[nm] for nm in names])
 
 plans_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                          "..", "plans",

@@ -16,18 +16,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
-
 
 def main() -> int:
     import duckdb
 
     import __spark_entry__ as m
-    from bench import REBUILD_EACH_REP
-    from obsplus_spark import get_spark
+    from bench import BASE_TABLES, REBUILD_EACH_REP, bench_session
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 4
@@ -38,11 +32,7 @@ def main() -> int:
     # sf0.1 sweep minimum, but a 10-80× synthetic dir needs shuffle
     # width to follow the fact tables (the r9 phash harness lesson,
     # pinned by VERDICT r9 #7). Override via SPARK_GRAFT_SHUFFLE.
-    spark = get_spark(
-        "bench_compare",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
+    spark = bench_session("bench_compare")
     qs = m.queries()
     if only:
         qs = {n: f for n, f in qs.items() if n in only}
@@ -62,7 +52,7 @@ def main() -> int:
 
     # --- oracle side (same warmup + best-of protocol) ---
     con = duckdb.connect()
-    for t in TABLES:
+    for t in BASE_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM"
             f" read_parquet('{sf_dir}/{t}.parquet')"

@@ -30,22 +30,11 @@ def main() -> None:
     names = args
 
     import __spark_entry__ as entrymod
-    from obsplus_spark import get_spark
+    from bench import bench_session, warm_up
 
-    spark = get_spark(
-        "build_profile",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
+    spark = bench_session("build_profile")
     qs = entrymod.queries()
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for nm in names:
-        qs[nm](spark, warm_dir).write.mode("overwrite").format("noop").save()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        entrymod._t(spark, sf_dir, t)
+    warm_up(spark, entrymod, sf_dir, [qs[nm] for nm in names])
 
     for nm in names:
         fn = qs[nm]

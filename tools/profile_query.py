@@ -39,28 +39,13 @@ def main() -> None:
     names = args
 
     import __spark_entry__ as entrymod
-    from bench import REBUILD_EACH_REP
-    from obsplus_spark import get_spark
+    from bench import REBUILD_EACH_REP, bench_session, warm_up
 
-    spark = get_spark(
-        "profile",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            # the profiler needs the UI REST API for stage attribution
-            "spark.ui.enabled": "true",
-        },
-    )
+    # the profiler needs the UI REST API for stage attribution
+    spark = bench_session("profile", {"spark.ui.enabled": "true"})
     ui = "http://localhost:4040"
     qs = entrymod.queries()
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for nm in names:
-        qs[nm](spark, warm_dir).write.mode("overwrite").format("noop").save()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        entrymod._t(spark, sf_dir, t)
+    warm_up(spark, entrymod, sf_dir, [qs[nm] for nm in names])
 
     app_id = rest(ui, "applications")[0]["id"]
 

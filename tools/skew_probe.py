@@ -31,26 +31,12 @@ def main() -> None:
     names = args
 
     import __spark_entry__ as entrymod
-    from obsplus_spark import get_spark
+    from bench import bench_session, warm_up
 
-    spark = get_spark(
-        "skew_probe",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "4")),
-        extra_conf={
-            "spark.sql.adaptive.enabled": "false",
-            "spark.ui.enabled": "true",
-        },
-    )
+    spark = bench_session("skew_probe", {"spark.ui.enabled": "true"})
     ui = spark.sparkContext.uiWebUrl
     qs = entrymod.queries()
-    warm_dir = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
-    if not os.path.isdir(warm_dir):
-        warm_dir = sf_dir
-    for nm in names:
-        qs[nm](spark, warm_dir).write.mode("overwrite").format("noop").save()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        entrymod._t(spark, sf_dir, t)
+    warm_up(spark, entrymod, sf_dir, [qs[nm] for nm in names])
 
     app = rest(ui, "applications")[0]["id"]
     for nm in names:
